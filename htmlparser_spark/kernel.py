@@ -1,30 +1,40 @@
-"""Arrow-batch kernels + Spark schemas: the Python↔JVM boundary.
+"""The Python↔JVM boundary: one Arrow row-kernel layer + Spark schemas.
 
-Everything here is a *vectorized* batch function (``mapInPandas`` /
-scalar ``pandas_udf``) — no per-row Python UDFs anywhere (contract
-from BASELINE.json input_hint). Each kernel is a pure function of the
-``text`` column, which is what makes the pipeline idempotent and
+Every per-row text/HTML operator in the package has one of two shapes,
+and both run through the helpers here on ``DataFrame.mapInArrow`` —
+no pandas conversion, no per-row Python UDFs (contract from
+BASELINE.json input_hint):
+
+- ``row_map``: the input columns plus per-row output columns. Input
+  columns pass through zero-copy from the Arrow ``RecordBatch``.
+- ``row_explode``: key columns plus any number of item rows per input
+  row (DOM nodes, table cells, links, sentences, …).
+
+Each helper transposes the per-row tuples once per batch and builds
+every output column with ``pa.array`` at the Arrow type pyspark derives
+from the declared ``StructType``, so call sites write only a per-row
+function and its Spark fields. Each kernel is a pure function of its
+input columns, which is what makes the pipeline idempotent and
 checkpoint-resumable.
 
 The parse kernel fuses tokenize → tree-build → boilerplate-strip →
 serialize into ONE stage (the reference gets the same effect from
 parse-time callbacks, html.cpp:539-553; in Spark the fusion is free
-because a single mapInPandas stage pipelines per Arrow batch).
+because a single mapInArrow stage pipelines per Arrow batch).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Callable, Iterable, Sequence
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     IntegerType,
-    LongType,
     MapType,
     StringType,
     StructField,
@@ -36,12 +46,9 @@ from .htmldom import parse
 __all__ = [
     "NODE_STRUCT",
     "ERROR_STRUCT",
-    "EXTRACT_OUTPUT_FIELDS",
-    "extract_result_schema",
-    "make_extract_fn",
+    "row_map",
+    "row_explode",
     "extract_text",
-    "nodes_schema",
-    "make_explode_nodes_fn",
     "explode_nodes",
 ]
 
@@ -67,8 +74,82 @@ ERROR_STRUCT = StructType([
     StructField("path", StringType(), False),
 ])
 
+
+def _arrow_columns(df: DataFrame, fields: Sequence[StructField]):
+    """Build, on the driver, the per-batch function that transposes a
+    list of row tuples into one Arrow array per field, typed exactly as
+    pyspark types a Python result for this session (string vs
+    large_string follows ``spark.sql.execution.arrow.useLargeVarTypes``)."""
+    large = df.sparkSession.conf.get(
+        "spark.sql.execution.arrow.useLargeVarTypes", "false") == "true"
+    types = [to_arrow_type(f.dataType, prefers_large_types=large)
+             for f in fields]
+
+    def columns(rows: list) -> list:
+        cols = zip(*rows) if rows else [()] * len(types)
+        return [pa.array(c, type=t) for c, t in zip(cols, types)]
+
+    return columns
+
+
+def row_map(df: DataFrame, text_col: str, fields: Sequence[StructField],
+            fn: Callable[[str], tuple], null: tuple,
+            drop_text: bool = False) -> DataFrame:
+    """``df``'s columns plus ``fields``: ``fn(s)`` returns one tuple
+    (one value per field) for each non-NULL ``text_col`` value; a NULL
+    row gets ``null``. ``drop_text=True`` removes ``text_col`` inside
+    the kernel, so the source HTML never makes the Arrow return
+    transfer or any downstream shuffle."""
+    keep = [f for f in df.schema.fields
+            if not (drop_text and f.name == text_col)]
+    names = [f.name for f in keep] + [f.name for f in fields]
+    columns = _arrow_columns(df, fields)
+
+    def kernel(batches: Iterable[pa.RecordBatch]):
+        for batch in batches:
+            rows = [null if s is None else fn(s)
+                    for s in batch.column(text_col).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(f.name) for f in keep] + columns(rows),
+                names=names)
+
+    return df.mapInArrow(kernel, StructType(keep + list(fields)))
+
+
+def row_explode(df: DataFrame, key_cols: Sequence[str],
+                in_cols: Sequence[str], fields: Sequence[StructField],
+                fn: Callable[..., Iterable[tuple]]) -> DataFrame:
+    """``key_cols`` plus ``fields``, one output row per item:
+    ``fn(*vals)`` gets one input row's ``in_cols`` values and returns
+    an iterable of row tuples (one value per field). A row whose first
+    input column is NULL emits no rows; later input columns reach
+    ``fn`` as given (NULL → None). Key values are replicated with
+    ``take`` on the source row index, never through Python."""
+    key_cols, in_cols = list(key_cols), list(in_cols)
+    names = key_cols + [f.name for f in fields]
+    columns = _arrow_columns(df, fields)
+
+    def kernel(batches: Iterable[pa.RecordBatch]):
+        for batch in batches:
+            src, rows = [], []
+            vals = zip(*(batch.column(c).to_pylist() for c in in_cols))
+            for i, v in enumerate(vals):
+                if v[0] is None:
+                    continue
+                for r in fn(*v):
+                    src.append(i)
+                    rows.append(r)
+            idx = pa.array(src, type=pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(k).take(idx) for k in key_cols]
+                + columns(rows), names=names)
+
+    schema = StructType([df.schema[k] for k in key_cols] + list(fields))
+    return df.select(*key_cols, *in_cols).mapInArrow(kernel, schema)
+
+
 # Columns the extraction kernel appends to the passthrough columns.
-EXTRACT_OUTPUT_FIELDS = [
+_EXTRACT_FIELDS = [
     StructField("extracted_text", StringType(), True),
     StructField("raw_html", StringType(), True),
     StructField("n_nodes", IntegerType(), True),
@@ -76,145 +157,54 @@ EXTRACT_OUTPUT_FIELDS = [
 ]
 
 
-def extract_result_schema(passthrough: StructType,
-                          include_raw: bool = True,
-                          drop_cols: tuple = ()) -> StructType:
-    fields = [f for f in passthrough.fields if f.name not in drop_cols]
-    for f in EXTRACT_OUTPUT_FIELDS:
-        if f.name == "raw_html" and not include_raw:
-            continue
-        fields.append(f)
-    return StructType(fields)
-
-
-def make_extract_fn(text_col: str = "text", strip: bool = True,
-                    include_raw: bool = True, raw_collapse: bool = False,
-                    drop_text: bool = False, decode_entities: bool = False):
-    """Build the mapInPandas kernel: per Arrow batch, parse every turn
-    and emit extracted_text (+ raw_html, node/error counts).
+def extract_text(df: DataFrame, text_col: str = "text", strip: bool = True,
+                 include_raw: bool = True, drop_text: bool = False,
+                 decode_entities: bool = False) -> DataFrame:
+    """DataFrame-level extraction: append extracted_text / raw_html /
+    n_nodes / n_errors to ``df`` via one Arrow-batched stage (the fused
+    single-pass kernel, differentially tested against the Doc path in
+    tests/test_fused_equivalence.py).
 
     ``strip`` toggles the boilerplate-strip stage (drop script/style
     subtrees) — ON for the pipeline, OFF for reference-equality runs.
-    ``decode_entities`` (opt-in, default OFF = reference byte-equality)
-    decodes HTML5 character references per text node in extracted_text
-    only (htmldom/fused.py).
-    """
-    from .htmldom.fused import extract_fused
-
-    def extract_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf[text_col]
-            n = len(texts)
-            ext = [None] * n
-            raw = [None] * n
-            n_nodes = [0] * n
-            n_errors = [0] * n
-            for i, s in enumerate(texts):
-                if s is None:
-                    continue
-                # fused single-pass kernel (differentially tested against
-                # the Doc path in tests/test_fused_equivalence.py)
-                ext[i], raw[i], n_nodes[i], n_errors[i] = extract_fused(
-                    s, strip=strip, want_raw=include_raw,
-                    raw_collapse=raw_collapse,
-                    decode_entities=decode_entities)
-            # dropping the source HTML here (not in a later projection)
-            # keeps it out of the Arrow return transfer and every
-            # downstream shuffle — at 10^12-turn scale the raw HTML is
-            # the widest column in the table
-            out = (pdf.drop(columns=[text_col]) if drop_text
-                   else pdf.copy())
-            out["extracted_text"] = pd.Series(ext, dtype="object")
-            if include_raw:
-                out["raw_html"] = pd.Series(raw, dtype="object")
-            out["n_nodes"] = pd.Series(n_nodes, dtype="int32")
-            out["n_errors"] = pd.Series(n_errors, dtype="int32")
-            yield out
-
-    return extract_fn
-
-
-def extract_text(df: DataFrame, text_col: str = "text", strip: bool = True,
-                 include_raw: bool = True, raw_collapse: bool = False,
-                 drop_text: bool = False,
-                 decode_entities: bool = False) -> DataFrame:
-    """DataFrame-level extraction: append extracted_text / raw_html /
-    n_nodes / n_errors to ``df`` via one Arrow-batched stage.
     ``drop_text=True`` removes the source HTML column from the output
     (shuffle/sink payload reduction for the pipeline hot path).
     ``decode_entities=True`` opts in to HTML5 character-reference
     decoding of extracted_text (default OFF = reference
     byte-equality)."""
-    schema = extract_result_schema(
-        df.schema, include_raw=include_raw,
-        drop_cols=(text_col,) if drop_text else ())
-    fn = make_extract_fn(text_col=text_col, strip=strip,
-                         include_raw=include_raw, raw_collapse=raw_collapse,
-                         drop_text=drop_text,
-                         decode_entities=decode_entities)
-    return df.mapInPandas(fn, schema)
+    from .htmldom.fused import extract_fused
 
+    def fn(s):
+        ext, raw, n_nodes, n_errors = extract_fused(
+            s, strip=strip, want_raw=include_raw,
+            decode_entities=decode_entities)
+        return ((ext, raw, n_nodes, n_errors) if include_raw
+                else (ext, n_nodes, n_errors))
 
-def nodes_schema(passthrough: StructType) -> StructType:
-    """Schema of the exploded nodes view: passthrough keys + NODE_STRUCT
-    fields as top-level columns (one output row per DOM node)."""
-    return StructType(list(passthrough.fields) + list(NODE_STRUCT.fields))
-
-
-def make_explode_nodes_fn(text_col: str = "text", key_cols=("doc_id",)):
-    """Build a mapInPandas kernel producing the exploded relational DOM:
-    one row per node, keyed by ``key_cols``. Selector predicates become
-    plain Spark SQL filters over this view (SURVEY §2.C mapping)."""
-    key_cols = list(key_cols)
-
-    def explode_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys = {k: [] for k in key_cols}
-            cols = {
-                "node_id": [], "parent_id": [], "depth": [], "kind": [],
-                "tag_name": [], "content": [], "attrs": [],
-                "self_closing": [], "tag_index": [], "n_tag_children": [],
-                "n_tag_siblings": [], "ancestor_ids": [],
-            }
-            for row in pdf[key_cols + [text_col]].itertuples(index=False):
-                s = row[-1]
-                if s is None:
-                    continue
-                doc = parse(s)
-                m = len(doc)
-                for k, v in zip(key_cols, row[:-1]):
-                    keys[k].extend([v] * m)
-                cols["node_id"].extend(range(m))
-                cols["parent_id"].extend(doc.parent)
-                cols["depth"].extend(doc.depth)
-                cols["kind"].extend(doc.kind)
-                cols["tag_name"].extend(doc.tag)
-                cols["content"].extend(doc.content)
-                cols["attrs"].extend(doc.attrs)
-                cols["self_closing"].extend(doc.self_closing)
-                cols["tag_index"].extend(doc.tag_index)
-                cols["n_tag_children"].extend(doc.n_tag_children)
-                # parent's final tag count (powers the :last predicate)
-                cols["n_tag_siblings"].extend(
-                    doc.node_count_of(p) for p in doc.parent)
-                # ancestors root→parent, computed incrementally (parent
-                # precedes child in pre-order)
-                anc: list = [None] * m
-                parent = doc.parent
-                for nid in range(m):
-                    p = parent[nid]
-                    anc[nid] = [] if p < 0 else anc[p] + [p]
-                cols["ancestor_ids"].extend(anc)
-            out = pd.DataFrame({**keys, **cols})
-            yield out
-
-    return explode_fn
+    fields = [f for f in _EXTRACT_FIELDS
+              if include_raw or f.name != "raw_html"]
+    null = (None, None, 0, 0) if include_raw else (None, 0, 0)
+    return row_map(df, text_col, fields, fn, null, drop_text=drop_text)
 
 
 def explode_nodes(df: DataFrame, text_col: str = "text",
                   key_cols=("doc_id",)) -> DataFrame:
-    """Exploded relational DOM view of ``df[text_col]``."""
-    passthrough = StructType([df.schema[k] for k in key_cols])
-    fn = make_explode_nodes_fn(text_col=text_col, key_cols=key_cols)
-    return df.select(*key_cols, text_col).mapInPandas(
-        fn, nodes_schema(passthrough))
+    """Exploded relational DOM view of ``df[text_col]``: one row per
+    node, keyed by ``key_cols``, with the NODE_STRUCT fields as
+    top-level columns. Selector predicates become plain Spark SQL
+    filters over this view (SURVEY §2.C mapping)."""
+    def nodes(s):
+        doc = parse(s)
+        parent = doc.parent
+        # ancestors root→parent, computed incrementally (parent
+        # precedes child in pre-order)
+        anc: list = []
+        for p in parent:
+            anc.append([] if p < 0 else anc[p] + [p])
+        return zip(range(len(doc)), parent, doc.depth, doc.kind, doc.tag,
+                   doc.content, doc.attrs, doc.self_closing, doc.tag_index,
+                   doc.n_tag_children,
+                   # parent's final tag count (powers the :last predicate)
+                   (doc.node_count_of(p) for p in parent), anc)
+
+    return row_explode(df, key_cols, [text_col], NODE_STRUCT.fields, nodes)

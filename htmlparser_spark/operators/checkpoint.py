@@ -10,12 +10,13 @@ Mechanism (SURVEY §3.2 stage 2/6):
   content_hash is an order-insensitive XOR of per-row
   xxhash64(conv_id, turn_idx, extracted_text) — so a re-run can verify
   integrity, and duplicated work is detectable, not just avoidable.
-- Resume = left_anti join of the input against completed manifest
-  partition ids. The parse kernel is a pure function of `text`, so
-  re-running a bucket is idempotent by construction; output is written
-  with partitionBy(partition_id) + dynamic partition overwrite, making
-  bucket-level retries atomic-enough on a filesystem and exactly the
-  Iceberg overwrite-partition commit in production.
+- Resume = an IN-filter of the input against the committed manifest
+  partition ids (a driver-side list ≤ n_buckets). The parse kernel is
+  a pure function of `text`, so re-running a bucket is idempotent by
+  construction; output is written with partitionBy(partition_id) +
+  dynamic partition overwrite, making bucket-level retries
+  atomic-enough on a filesystem and exactly the Iceberg
+  overwrite-partition commit in production.
 """
 
 from __future__ import annotations
@@ -26,8 +27,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["with_partition_id", "load_manifest", "completed_partitions",
-           "filter_resume", "lineage_rows", "append_manifest",
+__all__ = ["with_partition_id", "load_manifest", "lineage_rows",
            "run_checkpointed", "row_hash_expr"]
 
 MANIFEST_SCHEMA = ("partition_id long, n_rows long, content_hash long, "
@@ -48,22 +48,6 @@ def load_manifest(spark: SparkSession, path: str) -> Optional[DataFrame]:
         return spark.read.parquet(path)
     except Exception:
         return None
-
-
-def completed_partitions(spark: SparkSession, path: str) -> Optional[DataFrame]:
-    m = load_manifest(spark, path)
-    if m is None:
-        return None
-    return m.select("partition_id").distinct()
-
-
-def filter_resume(df: DataFrame, spark: SparkSession,
-                  manifest_path: str) -> DataFrame:
-    """Drop rows whose bucket is already committed (left_anti)."""
-    done = completed_partitions(spark, manifest_path)
-    if done is None:
-        return df
-    return df.join(F.broadcast(done), "partition_id", "left_anti")
 
 
 def completed_ids(spark: SparkSession, path: str) -> Optional[list]:
@@ -106,10 +90,6 @@ def lineage_rows(out: DataFrame, run_id: str,
             .withColumn("run_id", F.lit(run_id)))
 
 
-def append_manifest(lineage: DataFrame, path: str) -> None:
-    lineage.write.mode("append").parquet(path)
-
-
 def append_manifest_rows(rows, path: str) -> None:
     """Driver-side manifest append (pyarrow, atomic rename). The
     manifest is tiny (≤ n_buckets rows) — a Spark job here costs
@@ -142,7 +122,6 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
                      manifest_path: str, n_buckets: int = 64,
                      run_id: str = "run-0", key_col: str = "conv_id",
                      extract_kwargs: Optional[dict] = None,
-                     cluster_write: bool = True,
                      max_buckets: Optional[int] = None,
                      lineage_mode: str = "full",
                      transform=None,
@@ -190,18 +169,7 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     columns as ``extra_hash_cols`` so the lineage hash stays
     row-unique (see row_hash_expr). The ordering fusion only applies
     to the default kernel path (a transform orders its own output)."""
-    import time
-
     from .extract import extract_transcripts
-
-    trace = os.environ.get("HTMLPARSER_TRACE") == "1"
-    marks = [("t0", time.time())]
-
-    def mark(name):
-        if trace:
-            marks.append((name, time.time()))
-            print(f"[trace] {name}: "
-                  f"{marks[-1][1] - marks[-2][1]:.1f}s", flush=True)
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # ---- fused ordering (default): the ordering window and the
@@ -221,7 +189,7 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     # conv_id because conv_id determines partition_id.
     ek = dict(extract_kwargs or {})
     fuse_order = (transform is None
-                  and cluster_write and ek.get("order", True)
+                  and ek.get("order", True)
                   and ek.get("order_impl", "window") == "window"
                   and key_col == "conv_id")
     if fuse_order:
@@ -246,36 +214,26 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     # one scan partition — cheap relative to the pipeline.
     if todo.isEmpty():
         return []
-    mark("resume")
     out = (transform(todo) if transform is not None
            else extract_transcripts(todo, **ek))
-    if cluster_write:
-        # cluster by bucket before the partitioned write: file count
-        # becomes ~n_buckets instead of write_tasks × n_buckets, and
-        # the dynamic-overwrite commit stays O(n_buckets) as the
-        # cluster grows. sortWithinPartitions makes each bucket file
-        # (conv_id, turn_idx)-sorted — deterministic layout, ordered
-        # consumer reads, better parquet encoding. The sort is
-        # skippable (HTMLPARSER_SORT_BUCKETS=0): the write stage is
-        # memory-bandwidth-bound at high local parallelism, and the
-        # sorted layout is a consumer nicety, not a correctness
-        # requirement (lineage hashes are order-insensitive).
-        out = out.repartition(n_buckets, "partition_id")
-        if os.environ.get("HTMLPARSER_SORT_BUCKETS", "1") != "0":
-            out = out.sortWithinPartitions(
-                "partition_id", "conv_id", "turn_idx",
-                *extra_hash_cols)
-        if fuse_order:
-            from pyspark.sql import Window
-            w = (Window.partitionBy("partition_id", "conv_id")
-                 .orderBy("turn_idx"))
-            out = out.withColumn("turn_seq",
-                                 F.row_number().over(w))
+    # cluster by bucket before the partitioned write: file count
+    # becomes ~n_buckets instead of write_tasks × n_buckets, and the
+    # dynamic-overwrite commit stays O(n_buckets) as the cluster grows.
+    # sortWithinPartitions makes each bucket file (conv_id,
+    # turn_idx)-sorted — deterministic layout, ordered consumer reads,
+    # better parquet encoding.
+    out = (out.repartition(n_buckets, "partition_id")
+           .sortWithinPartitions("partition_id", "conv_id", "turn_idx",
+                                 *extra_hash_cols))
+    if fuse_order:
+        from pyspark.sql import Window
+        w = (Window.partitionBy("partition_id", "conv_id")
+             .orderBy("turn_idx"))
+        out = out.withColumn("turn_seq", F.row_number().over(w))
     if lineage_mode == "hash_col":
         out = out.withColumn(ROW_HASH_COL, row_hash_expr(extra_hash_cols))
     out.write.mode("overwrite").partitionBy("partition_id") \
         .parquet(output_path)
-    mark("extract+write")
     # lineage is computed from a RE-READ of what landed on disk (not
     # from the in-memory plan) — it certifies the committed data.
     # Column pruning keeps this pass cheap: full mode reads back the
@@ -294,7 +252,5 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
                         from_hash_col=lineage_mode == "hash_col",
                         extra_cols=extra_hash_cols) \
         .collect()
-    mark("lineage")
     append_manifest_rows(rows, manifest_path)
-    mark("manifest_append")
     return rows

@@ -39,21 +39,19 @@ are skipped (spec-less garbage); all other missing fields are NULL.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Tuple
-
-import pandas as pd
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
     StringType,
     StructField,
-    StructType,
 )
 
 from ..htmldom.constants import KIND_TAG, KIND_TEXT
 from ..htmldom.parse import parse
 from ..htmldom.serialize import to_text
+from ..kernel import row_explode
 
 __all__ = ["parse_feed", "feed_entries"]
 
@@ -173,22 +171,5 @@ def feed_entries(df: DataFrame, text_col: str = "feed_xml",
     """One row per feed entry: (key_cols…, entry_idx, fmt,
     feed_title, title, url, entry_id, published, summary). Map-only
     Arrow stage; NULL/non-feed bodies contribute no rows."""
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    schema = StructType(key_fields + _FEED_FIELDS)
-    keys = list(key_cols)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf[keys + [text_col]].itertuples(index=False):
-                *kv, body = tup
-                if body is None:
-                    continue
-                for rec in parse_feed(body):
-                    rows.append((*kv, *rec))
-            out = pd.DataFrame(
-                rows, columns=keys + [f.name for f in _FEED_FIELDS])
-            out = out.astype({"entry_idx": "int32"})
-            yield out
-
-    return df.select(*keys, text_col).mapInPandas(fn, schema=schema)
+    keys = [f.name for f in df.schema.fields if f.name in key_cols]
+    return row_explode(df, keys, [text_col], _FEED_FIELDS, parse_feed)

@@ -27,9 +27,7 @@ Semantics pinned to RFC 9309:
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Optional, Tuple
-
-import pandas as pd
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -37,8 +35,9 @@ from pyspark.sql.types import (
     IntegerType,
     StringType,
     StructField,
-    StructType,
 )
+
+from ..kernel import row_explode
 
 __all__ = ["parse_robots_txt", "is_allowed", "robots_rules",
            "parse_sitemap", "sitemap_urls"]
@@ -140,25 +139,8 @@ def robots_rules(df: DataFrame, text_col: str = "robots_txt",
     directive, value). NULL bodies contribute no rows. Map-only
     Arrow stage — robots.txt files are tiny and per-host, so the
     natural unit is one input row per host."""
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    schema = StructType(key_fields + _RULE_FIELDS)
-    keys = list(key_cols)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf[keys + [text_col]].itertuples(index=False):
-                *kv, body = tup
-                if body is None:
-                    continue
-                for rec in parse_robots_txt(body):
-                    rows.append((*kv, *rec))
-            out = pd.DataFrame(
-                rows, columns=keys + [f.name for f in _RULE_FIELDS])
-            out = out.astype({"rule_idx": "int32"})
-            yield out
-
-    return df.select(*keys, text_col).mapInPandas(fn, schema=schema)
+    keys = [f.name for f in df.schema.fields if f.name in key_cols]
+    return row_explode(df, keys, [text_col], _RULE_FIELDS, parse_robots_txt)
 
 
 # ------------------------------------------------------------------ #
@@ -217,22 +199,5 @@ def sitemap_urls(df: DataFrame, text_col: str = "sitemap_xml",
     """One row per sitemap entry: (key_cols…, url_idx, loc, lastmod,
     changefreq, priority, is_index). Map-only Arrow stage; NULL
     bodies contribute no rows."""
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    schema = StructType(key_fields + _SITEMAP_FIELDS)
-    keys = list(key_cols)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf[keys + [text_col]].itertuples(index=False):
-                *kv, body = tup
-                if body is None:
-                    continue
-                for rec in parse_sitemap(body):
-                    rows.append((*kv, *rec))
-            out = pd.DataFrame(
-                rows, columns=keys + [f.name for f in _SITEMAP_FIELDS])
-            out = out.astype({"url_idx": "int32", "is_index": "bool"})
-            yield out
-
-    return df.select(*keys, text_col).mapInPandas(fn, schema=schema)
+    keys = [f.name for f in df.schema.fields if f.name in key_cols]
+    return row_explode(df, keys, [text_col], _SITEMAP_FIELDS, parse_sitemap)

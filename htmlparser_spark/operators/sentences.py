@@ -27,17 +27,16 @@ identical.
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Optional, Tuple
-
-import pandas as pd
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
     StringType,
     StructField,
-    StructType,
 )
+
+from ..kernel import row_explode
 
 __all__ = ["split_sentences_str", "split_sentences",
            "pack_sentences_str", "pack_sentences",
@@ -93,23 +92,9 @@ def split_sentences(df: DataFrame, text_col: str = "text",
                     ) -> DataFrame:
     """One row per sentence: (key_cols…, sent_idx, sentence).
     Map-only Arrow stage; NULL/empty texts contribute no rows."""
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    schema = StructType(key_fields + _SENT_FIELDS)
-    keys = list(key_cols)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf[keys + [text_col]].itertuples(index=False):
-                *kv, body = tup
-                for i, s in enumerate(split_sentences_str(body)):
-                    rows.append((*kv, i, s))
-            out = pd.DataFrame(
-                rows, columns=keys + [f.name for f in _SENT_FIELDS])
-            out["sent_idx"] = out["sent_idx"].astype("int32")
-            yield out
-
-    return df.select(*keys, text_col).mapInPandas(fn, schema=schema)
+    keys = [f.name for f in df.schema.fields if f.name in key_cols]
+    return row_explode(df, keys, [text_col], _SENT_FIELDS,
+                       lambda body: enumerate(split_sentences_str(body)))
 
 
 def pack_sentences_str(text: Optional[str], budget: int
@@ -156,25 +141,10 @@ def pack_sentences(df: DataFrame, text_col: str = "text",
     NULL/empty text contribute no rows."""
     if budget < 1:
         raise ValueError("budget must be >= 1")
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    schema = StructType(key_fields + _PACK_FIELDS)
-    keys = list(key_cols)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf[keys + [text_col]].itertuples(index=False):
-                *kv, body = tup
-                for i, (ns, nt, ct) in enumerate(
-                        pack_sentences_str(body, budget)):
-                    rows.append((*kv, i, ns, nt, ct))
-            out = pd.DataFrame(
-                rows, columns=keys + [f.name for f in _PACK_FIELDS])
-            for c in ("chunk_idx", "n_sentences", "n_tokens"):
-                out[c] = out[c].astype("int32")
-            yield out
-
-    return df.select(*keys, text_col).mapInPandas(fn, schema=schema)
+    keys = [f.name for f in df.schema.fields if f.name in key_cols]
+    return row_explode(df, keys, [text_col], _PACK_FIELDS,
+                       lambda body: ((i, *r) for i, r in enumerate(
+                           pack_sentences_str(body, budget))))
 
 
 def sentence_dedup(df: DataFrame, id_col: str = "doc_id",

@@ -46,21 +46,19 @@ pipeline position as pagemeta.
 from __future__ import annotations
 
 import json
-from typing import Iterator, List, Optional, Tuple
-
-import pandas as pd
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
     StringType,
     StructField,
-    StructType,
 )
 
 from ..htmldom.constants import KIND_TAG
 from ..htmldom.parse import parse
 from ..htmldom.serialize import to_text
+from ..kernel import row_explode
 
 __all__ = ["parse_structured", "structured_data"]
 
@@ -211,24 +209,5 @@ def structured_data(df: DataFrame, text_col: str = "text",
     block_idx, item_idx, item_type, prop, value, ref_item). Map-only
     Arrow stage; NULL bodies and documents without structured data
     contribute no rows."""
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    schema = StructType(key_fields + _STRUCT_FIELDS)
-    keys = list(key_cols)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf[keys + [text_col]].itertuples(index=False):
-                *kv, body = tup
-                if body is None:
-                    continue
-                for rec in parse_structured(body):
-                    rows.append((*kv, *rec))
-            out = pd.DataFrame(
-                rows, columns=keys + [f.name for f in _STRUCT_FIELDS])
-            out["block_idx"] = out["block_idx"].astype("Int32")
-            out["item_idx"] = out["item_idx"].astype("int32")
-            out["ref_item"] = out["ref_item"].astype("Int32")
-            yield out
-
-    return df.select(*keys, text_col).mapInPandas(fn, schema=schema)
+    keys = [f.name for f in df.schema.fields if f.name in key_cols]
+    return row_explode(df, keys, [text_col], _STRUCT_FIELDS, parse_structured)

@@ -32,17 +32,16 @@ oracles (same role as transcripts.generate_rows).
 from __future__ import annotations
 
 import zlib
-from typing import Iterator, List, Optional, Tuple
-
-import pandas as pd
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
     StringType,
     StructField,
-    StructType,
 )
+
+from ..kernel import row_explode
 
 __all__ = ["parse_warc_bytes", "warc_records", "synth_warc_bytes"]
 
@@ -167,27 +166,11 @@ def warc_records(df: DataFrame, blob_col: str = "content",
     target_uri, warc_date, http_status, content_type, body, error).
     Feed the output's response rows straight into the extraction
     kernel (body = the HTML)."""
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    schema = StructType(key_fields + _REC_FIELDS)
-    keys = list(key_cols)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf[keys + [blob_col]].itertuples(index=False):
-                *kv, blob = tup
-                if blob is None:
-                    continue
-                if isinstance(blob, str):
-                    blob = blob.encode("utf-8")
-                for rec in parse_warc_bytes(bytes(blob)):
-                    rows.append((*kv, *rec))
-            out = pd.DataFrame(
-                rows, columns=keys + [f.name for f in _REC_FIELDS])
-            out = out.astype({"record_idx": "int32"})
-            yield out
-
-    return df.select(*keys, blob_col).mapInPandas(fn, schema=schema)
+    keys = [f.name for f in df.schema.fields if f.name in key_cols]
+    return row_explode(df, keys, [blob_col], _REC_FIELDS,
+                       lambda blob: parse_warc_bytes(
+                           blob.encode("utf-8") if isinstance(blob, str)
+                           else bytes(blob)))
 
 
 def synth_warc_bytes(pages: List[Tuple[str, str, str]],

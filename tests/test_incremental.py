@@ -81,6 +81,7 @@ def test_history_is_scanned_not_reshingled(spark, index_dir):
     plan2 = deterministic._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan2
     assert "MapInPandas" not in plan2
+    assert "MapInArrow" not in plan2
 
 
 def test_exact_beats_near_priority(spark, index_dir):

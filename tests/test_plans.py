@@ -57,7 +57,7 @@ def test_pipeline_has_no_row_python_udf(spark, docs):
     df = extract_text(docs.select("doc_id", "text"), include_raw=False)
     assert_no_python_row_udf(df)
     # and the Python that IS there is Arrow-batched
-    assert "MapInPandas" in explain_string(df, "extended")
+    assert "MapInArrow" in explain_string(df, "extended")
 
 
 def test_dedup_pipeline_plan_hygiene(spark, docs):
@@ -127,6 +127,7 @@ def test_webfilter_pure_codegen_no_shuffle(spark, docs):
         plan = explain_string(out)
         assert_no_python_row_udf(out)
         assert "Python" not in plan and "MapInPandas" not in plan
+        assert "MapInArrow" not in plan
         assert "Exchange" not in plan
 
 

@@ -52,6 +52,30 @@ def test_linearize_rejects_cycle_and_dangling(spark):
         linearize_threads(dangling, max_iterations=5)
 
 
+def test_linearize_ids_unique_per_conversation(spark):
+    # turn ids 1-3 repeat across conversations: conv 1 and 2 share a
+    # shape, conv 3 branches — no fan-out, no cross-splicing
+    df = spark.createDataFrame(
+        [(1, 1, None), (1, 2, 1), (1, 3, 2),
+         (2, 1, None), (2, 2, 1), (2, 3, 2),
+         (3, 1, None), (3, 2, 1), (3, 3, 1)],
+        "conv_id long, turn_id long, parent_id long")
+    got = sorted((r.conv_id, r.leaf_id, r.depth, r.path)
+                 for r in linearize_threads(df).collect())
+    assert got == [(1, 3, 3, "1,2,3"), (2, 3, 3, "1,2,3"),
+                   (3, 2, 2, "1,2"), (3, 3, 2, "1,3")]
+
+
+def test_linearize_converges_in_exactly_max_iterations(spark):
+    # a 2-node chain resolves in one round, so one round is enough
+    df = spark.createDataFrame(
+        [(1, 10, None), (1, 11, 10)],
+        "conv_id long, turn_id long, parent_id long")
+    got = [(r.leaf_id, r.path)
+           for r in linearize_threads(df, max_iterations=1).collect()]
+    assert got == [(11, "10,11")]
+
+
 def test_linearize_no_python(spark):
     # convergence runs driver-side counts, so build the converged
     # frame and check the final plan only
