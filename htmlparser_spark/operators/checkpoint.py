@@ -17,6 +17,12 @@ Mechanism (SURVEY §3.2 stage 2/6):
   dynamic partition overwrite, making bucket-level retries
   atomic-enough on a filesystem and exactly the Iceberg
   overwrite-partition commit in production.
+- Sizing: the write keeps one file per bucket (n_buckets files), but
+  its task count is one wave of cores, min(n_buckets,
+  defaultParallelism); each task writes several whole buckets. The
+  lineage re-read's parallel directory listing is capped the same way.
+  Both caps derive from the session, so a larger cluster gets wider
+  stages with no option to tune.
 """
 
 from __future__ import annotations
@@ -118,6 +124,40 @@ def append_manifest_rows(rows, path: str) -> None:
                                 f"manifest-{uuid.uuid4().hex}.parquet"))
 
 
+def _write_frame(out: DataFrame, n_buckets: int, fuse_order: bool,
+                 lineage_mode: str, extra_hash_cols: tuple = ()) -> DataFrame:
+    """The post-kernel frame ``run_checkpointed`` writes: ONE exchange
+    clustering rows by bucket, the bucket sort, the fused ordering
+    window and (hash_col lineage) the ``row_hash`` column.
+
+    Cluster by bucket before the partitioned write: every bucket lands
+    in exactly one write task, so the file count is n_buckets (one
+    sorted file per ``partition_id=`` directory) instead of
+    write_tasks × n_buckets, and the dynamic-overwrite commit stays
+    O(n_buckets) as the cluster grows. The TASK count is one wave of
+    cores, min(n_buckets, defaultParallelism), not n_buckets: a task
+    writes its buckets one after another, so n_buckets tasks on fewer
+    cores only add per-task overhead and a long imbalanced tail (on a
+    4-core VM, perfbench chat_turns' kernel → exchange → write took
+    2.67 s with 64 write tasks and 1.84 s with 4).
+    sortWithinPartitions makes each bucket file (conv_id,
+    turn_idx)-sorted — deterministic layout, ordered consumer reads,
+    better parquet encoding — and satisfies the fused window's
+    required ordering (see run_checkpointed)."""
+    tasks = min(n_buckets, out.sparkSession.sparkContext.defaultParallelism)
+    out = (out.repartition(tasks, "partition_id")
+           .sortWithinPartitions("partition_id", "conv_id", "turn_idx",
+                                 *extra_hash_cols))
+    if fuse_order:
+        from pyspark.sql import Window
+        w = (Window.partitionBy("partition_id", "conv_id")
+             .orderBy("turn_idx"))
+        out = out.withColumn("turn_seq", F.row_number().over(w))
+    if lineage_mode == "hash_col":
+        out = out.withColumn(ROW_HASH_COL, row_hash_expr(extra_hash_cols))
+    return out
+
+
 def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
                      manifest_path: str, n_buckets: int = 64,
                      run_id: str = "run-0", key_col: str = "conv_id",
@@ -172,6 +212,13 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     from .extract import extract_transcripts
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # the lineage re-read lists one leaf directory per bucket; above 32
+    # of them Spark lists in a parallel job of one task per directory
+    # (up to this cap), i.e. n_buckets tiny tasks. One wave of cores
+    # lists them as fast without the per-task overhead.
+    listing = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    spark.conf.set(listing, str(min(int(spark.conf.get(listing)),
+                                    spark.sparkContext.defaultParallelism)))
     # ---- fused ordering (default): the ordering window and the
     # bucket-clustered write want the SAME co-location — partition_id
     # is a pure function of conv_id, so hash-partitioning by
@@ -216,22 +263,8 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
         return []
     out = (transform(todo) if transform is not None
            else extract_transcripts(todo, **ek))
-    # cluster by bucket before the partitioned write: file count
-    # becomes ~n_buckets instead of write_tasks × n_buckets, and the
-    # dynamic-overwrite commit stays O(n_buckets) as the cluster grows.
-    # sortWithinPartitions makes each bucket file (conv_id,
-    # turn_idx)-sorted — deterministic layout, ordered consumer reads,
-    # better parquet encoding.
-    out = (out.repartition(n_buckets, "partition_id")
-           .sortWithinPartitions("partition_id", "conv_id", "turn_idx",
-                                 *extra_hash_cols))
-    if fuse_order:
-        from pyspark.sql import Window
-        w = (Window.partitionBy("partition_id", "conv_id")
-             .orderBy("turn_idx"))
-        out = out.withColumn("turn_seq", F.row_number().over(w))
-    if lineage_mode == "hash_col":
-        out = out.withColumn(ROW_HASH_COL, row_hash_expr(extra_hash_cols))
+    out = _write_frame(out, n_buckets, fuse_order, lineage_mode,
+                       extra_hash_cols)
     out.write.mode("overwrite").partitionBy("partition_id") \
         .parquet(output_path)
     # lineage is computed from a RE-READ of what landed on disk (not

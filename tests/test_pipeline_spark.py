@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from htmlparser_spark.htmldom import parse, to_raw_html, to_text_stripped
 from htmlparser_spark.operators.checkpoint import (
+    _write_frame,
     lineage_rows,
     run_checkpointed,
     with_partition_id,
@@ -228,8 +229,6 @@ def test_fused_order_write_single_exchange(spark, tmp_path):
     stage, BENCH/DIAGNOSIS_4_16.md)."""
     import re
 
-    from pyspark.sql import Window
-
     df = generate_spark_df(spark, n_convs=20, n_turns=300, seed=5,
                            mega_text=False)
     out_dir, man_dir = str(tmp_path / "o"), str(tmp_path / "m")
@@ -241,16 +240,83 @@ def test_fused_order_write_single_exchange(spark, tmp_path):
     got = {(r.conv_id, r.turn_idx): r.turn_seq for r in fused.collect()}
     assert got == exp and len(got) == 300
 
-    # pin the plan shape on the same composition run_checkpointed builds
-    plan_df = extract_transcripts(with_partition_id(df, 4),
-                                  include_raw=False, order=False) \
-        .repartition(4, "partition_id") \
-        .sortWithinPartitions("partition_id", "conv_id", "turn_idx")
-    w = Window.partitionBy("partition_id", "conv_id").orderBy("turn_idx")
-    plan_df = plan_df.withColumn("turn_seq", F.row_number().over(w))
+    # pin the plan of the frame run_checkpointed really writes, at more
+    # buckets than cores: ONE exchange sized by cores (4), ONE sort
+    plan_df = _write_frame(
+        extract_transcripts(with_partition_id(df, 16), include_raw=False,
+                            order=False),
+        16, fuse_order=True, lineage_mode="hash_col")
+    assert {"turn_seq", "row_hash"} <= set(plan_df.columns)
     p = plan_df._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning", p)) == 1
+    assert len(re.findall(
+        r"Exchange hashpartitioning\(partition_id#\d+L, 4\)", p)) == 1
     assert len(re.findall(r"\bSort \[", p)) == 1
+
+
+def test_write_sized_by_cores_not_buckets(spark, tmp_path):
+    """More buckets (48) than cores (4) and than Spark's 32-directory
+    parallel-listing threshold: the write still lands one sorted file
+    per bucket, certified by the lineage re-read, but neither the
+    write stage nor the re-read's listing job runs a task per bucket —
+    both run one wave of cores."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    n_buckets = 48
+    df = generate_spark_df(spark, n_convs=400, n_turns=2400, seed=11,
+                           mega_text=False)
+    out_dir, man_dir = str(tmp_path / "o"), str(tmp_path / "m")
+    sc = spark.sparkContext
+    sc.setJobGroup("write-sizing", "run_checkpointed, 48 buckets")
+    try:
+        rows = run_checkpointed(spark, df, out_dir, man_dir,
+                                n_buckets=n_buckets, run_id="sz",
+                                extract_kwargs={"include_raw": False})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    # one (conv_id, turn_idx)-sorted file per bucket directory
+    dirs = sorted(glob.glob(f"{out_dir}/partition_id=*"))
+    assert len(dirs) == n_buckets
+    for d in dirs:
+        files = glob.glob(f"{d}/*.parquet")
+        assert len(files) == 1, d
+        t = pq.read_table(files[0], columns=["conv_id", "turn_idx"])
+        keys = list(zip(t["conv_id"].to_pylist(),
+                        t["turn_idx"].to_pylist()))
+        assert keys == sorted(keys), d
+
+    # the returned lineage is what the output on disk recomputes to
+    out = spark.read.parquet(out_dir)
+    key = lambda rs: sorted(
+        (r.partition_id, r.n_rows, r.content_hash) for r in rs)
+    assert key(rows) == key(lineage_rows(out, "sz").collect())
+    assert sum(r.n_rows for r in rows) == 2400
+
+    # the fused window still numbers turns like the plain window path
+    exp_df = extract_transcripts(df, include_raw=False, order=True)
+    exp = {(r.conv_id, r.turn_idx): r.turn_seq for r in exp_df.collect()}
+    got = {(r.conv_id, r.turn_idx): r.turn_seq for r in out.collect()}
+    assert got == exp
+
+    # stage task counts of the call: the write is the last stage before
+    # the re-read, whose first job (named after spark.read.parquet) is
+    # the parallel listing of the 48 bucket directories
+    st = sc.statusTracker()
+    jobs = sorted(st.getJobIdsForGroup("write-sizing"))
+    stages = {j: [st.getStageInfo(s)
+                  for s in sorted(st.getJobInfo(j).stageIds)]
+              for j in jobs}
+    assert all(s is not None for ss in stages.values() for s in ss)
+    assert max(s.numTasks for ss in stages.values() for s in ss) == 4
+    reread = next(j for j in jobs
+                  if stages[j][-1].name.startswith("parquet at"))
+    write = max((s for j in jobs if j < reread for s in stages[j]),
+                key=lambda s: s.stageId)
+    assert write.numTasks == 4
+    assert stages[reread][-1].numTasks == 4
 
 
 def test_lineage_hash_col_manifest_equals_full(spark, tmp_path):
