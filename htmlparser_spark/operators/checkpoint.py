@@ -11,7 +11,8 @@ Mechanism (SURVEY §3.2 stage 2/6):
   xxhash64(conv_id, turn_idx, extracted_text) — so a re-run can verify
   integrity, and duplicated work is detectable, not just avoidable.
 - Resume = an IN-filter of the input against the committed manifest
-  partition ids (a driver-side list ≤ n_buckets). The parse kernel is
+  partition ids (a driver-side list ≤ n_buckets, read with pyarrow
+  without a Spark job). The parse kernel is
   a pure function of `text`, so re-running a bucket is idempotent by
   construction; output is written with partitionBy(partition_id) +
   dynamic partition overwrite, making bucket-level retries
@@ -33,7 +34,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["with_partition_id", "load_manifest", "lineage_rows",
+__all__ = ["with_partition_id", "lineage_rows",
            "run_checkpointed", "row_hash_expr"]
 
 MANIFEST_SCHEMA = ("partition_id long, n_rows long, content_hash long, "
@@ -47,23 +48,21 @@ def with_partition_id(df: DataFrame, n_buckets: int,
         F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("long"))
 
 
-def load_manifest(spark: SparkSession, path: str) -> Optional[DataFrame]:
-    if not os.path.exists(path):
-        return None
+def completed_ids(path: str) -> Optional[list]:
+    """Committed bucket ids as a driver-side list (None = no manifest,
+    or an empty or unreadable one). Read with pyarrow on the driver,
+    as ``append_manifest_rows`` writes it: the manifest is ≤ n_buckets
+    rows, so a Spark job to read it costs more in scheduling than the
+    read itself. Hidden ``.tmp-*`` files of an unfinished append are
+    ignored."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
     try:
-        return spark.read.parquet(path)
-    except Exception:
+        ids = ds.dataset(path, format="parquet") \
+            .to_table(columns=["partition_id"]).column(0)
+    except (OSError, pa.ArrowException):
         return None
-
-
-def completed_ids(spark: SparkSession, path: str) -> Optional[list]:
-    """Committed bucket ids as a driver-side list (None = no manifest).
-    Bounded by n_buckets, so always small enough to collect."""
-    m = load_manifest(spark, path)
-    if m is None:
-        return None
-    return [r.partition_id for r in m.select("partition_id").distinct()
-            .collect()]
+    return sorted(set(ids.to_pylist())) or None
 
 
 ROW_HASH_COL = "row_hash"
@@ -103,7 +102,6 @@ def append_manifest_rows(rows, path: str) -> None:
     is an Iceberg metadata append, i.e. also a driver-side operation."""
     if not rows:
         return
-    import os
     import uuid
 
     import pyarrow as pa
@@ -242,7 +240,7 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     if fuse_order:
         ek["order"] = False
     bucketed = with_partition_id(df, n_buckets, key_col)
-    done = completed_ids(spark, manifest_path)
+    done = completed_ids(manifest_path)
     todo = bucketed
     if done:
         # resume: committed buckets are a small driver-side list

@@ -521,3 +521,21 @@ def test_shot_keyframes_composition(spark):
     got = {(r.doc_id, r.shot_idx): r.start_frame
            for r in shot_keyframes(cuts).collect()}
     assert got == {(1, 0): 0, (1, 1): 2, (1, 2): 5, (2, 0): 0}
+
+
+def test_shot_keyframes_single_frame_clip(spark):
+    # a valid 1-frame clip has no frame pair: scene_cuts emits no row,
+    # so only the clip universe passed as ``clips`` gives it its
+    # (shot 0, frame 0) keyframe
+    from htmlparser_spark.operators.multimodal import (scene_cuts,
+                                                       shot_keyframes)
+    one_frame = (b"YUV4MPEG2 W4 H4 F25:1 Ip A1:1 C420\n"
+                 + b"FRAME\n" + bytes(range(24)))
+    clips = spark.createDataFrame([(7, one_frame)],
+                                  "doc_id long, blob binary")
+    cuts = scene_cuts(clips)
+    assert cuts.collect() == []
+    got = [(r.doc_id, r.shot_idx, r.start_frame)
+           for r in shot_keyframes(cuts, clips=clips).collect()]
+    assert got == [(7, 0, 0)]
+    assert shot_keyframes(cuts).collect() == []

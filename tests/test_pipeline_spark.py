@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from htmlparser_spark.htmldom import parse, to_raw_html, to_text_stripped
 from htmlparser_spark.operators.checkpoint import (
     _write_frame,
+    append_manifest_rows,
+    completed_ids,
     lineage_rows,
     run_checkpointed,
     with_partition_id,
@@ -104,6 +106,51 @@ def test_checkpoint_empty_input_first_run(spark, tmp_path):
     l1 = run_checkpointed(spark, df, out_dir, man_dir, n_buckets=4,
                           run_id="r1", extract_kwargs={"include_raw": False})
     assert sum(r.n_rows for r in l1) == 20
+
+
+def test_completed_ids_reads_manifest_on_driver(tmp_path):
+    """The committed bucket ids come from the manifest files alone:
+    duplicates across runs collapse, a hidden ``.tmp-*`` file of an
+    unfinished append is ignored, and a missing, empty or unreadable
+    manifest means nothing is committed."""
+    from pyspark.sql import Row
+
+    man = tmp_path / "manifest"
+    assert completed_ids(str(man)) is None
+    man.mkdir()
+    assert completed_ids(str(man)) is None
+    append_manifest_rows([Row(partition_id=2, n_rows=5, content_hash=7,
+                              run_id="r1"),
+                          Row(partition_id=0, n_rows=1, content_hash=3,
+                              run_id="r1")], str(man))
+    append_manifest_rows([Row(partition_id=2, n_rows=5, content_hash=7,
+                              run_id="r2")], str(man))
+    (man / ".tmp-unfinished.parquet").write_bytes(b"partial")
+    assert completed_ids(str(man)) == [0, 2]
+    (man / "manifest-corrupt.parquet").write_bytes(b"not parquet")
+    assert completed_ids(str(man)) is None
+
+
+def test_noop_rerun_starts_no_spark_job(spark, tmp_path):
+    """A re-run over a fully committed manifest returns [] without
+    starting a Spark job: the manifest is read on the driver."""
+    out_dir, man_dir = str(tmp_path / "out"), str(tmp_path / "manifest")
+    df = generate_spark_df(spark, n_convs=20, n_turns=120, seed=13,
+                           mega_text=False)
+    first = run_checkpointed(spark, df, out_dir, man_dir, n_buckets=4,
+                             run_id="r1",
+                             extract_kwargs={"include_raw": False})
+    assert {r.partition_id for r in first} == {0, 1, 2, 3}
+    sc = spark.sparkContext
+    sc.setJobGroup("noop-rerun", "run_checkpointed over a full manifest")
+    try:
+        again = run_checkpointed(spark, df, out_dir, man_dir, n_buckets=4,
+                                 run_id="r2",
+                                 extract_kwargs={"include_raw": False})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again == []
+    assert sc.statusTracker().getJobIdsForGroup("noop-rerun") == []
 
 
 def test_read_transcripts_json_csv_parquet(spark, tmp_path):
